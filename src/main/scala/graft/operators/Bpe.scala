@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.BpeFunctions
+import graft.operators.Pin.syntax._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -58,7 +59,7 @@ object Bpe {
   def train(docs: DataFrame, text: Column, nMerges: Int)
       : Seq[(String, String)] = {
     val merges = scala.collection.mutable.ArrayBuffer.empty[(String, String)]
-    var syms = asSymbols(wordCounts(docs, text)).localCheckpoint()
+    var syms = asSymbols(wordCounts(docs, text)).pinned()
     var i = 0
     var done = false
     while (i < nMerges && !done) {
@@ -71,7 +72,7 @@ object Bpe {
         val (a, b) = (top(0).getString(0), top(0).getString(1))
         merges += ((a, b))
         syms = syms.withColumn("sym",
-          BpeFunctions.bpe_merge(col("sym"), a, b)).localCheckpoint()
+          BpeFunctions.bpe_merge(col("sym"), a, b)).pinned()
       }
       i += 1
     }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.operators.Pin.syntax._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -68,7 +69,7 @@ object Coreset {
       // localCheckpoint, not cache(): re-scanned once per selected
       // center (k rounds) — per-scan columnar array decode dominates
       // (see Graph.pageRank's ew note)
-      .localCheckpoint()
+      .pinned()
     try {
       val seed = base.orderBy(col(idCol)).limit(1)
         .select(col(idCol), col("__kc_q")).collect()

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.operators.Pin.syntax._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -32,7 +33,7 @@ object CorpusOverlap {
         explode(array_distinct(TextAnalysis.shingles(text, n)))
           .as("__co_sh"))
       .distinct()
-      .localCheckpoint() // consumed three times below (sizes + both join sides)
+      .pinned() // consumed three times below (sizes + both join sides)
     val sizes = postings.groupBy(col("__co_src"))
       .agg(count(lit(1)).as("__co_n"))
     val common = postings.as("a")

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.operators.Pin.syntax._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -121,7 +122,7 @@ object Dedup {
     unseen.join(
       unseen.groupBy(col("content_hash")).agg(min(col(idCol)).as(idCol)),
       Seq(idCol, "content_hash"), "left_semi")
-      .localCheckpoint()
+      .pinned()
   }
 
   /** Phase 2 of [[exactKeepIncremental]]: record the staged survivors'
@@ -248,7 +249,7 @@ object Dedup {
     // write below refreshes the path (same trap as exactKeepIncremental)
     val survivors = withSig
       .join(dups, withSig(idCol) === dups("__id"), "left_anti")
-      .localCheckpoint()
+      .pinned()
     val newEntries = survivors.select(col(idCol).as("__id"), col("__sig"),
         posexplode(bandHashes))
       .select(col("pos").as("band"), col("col").as("band_hash"),
@@ -646,10 +647,10 @@ object Dedup {
         out.result().iterator
       }
       .toDF("u", "v")
-    val edges = stars.localCheckpoint()
+    val edges = stars.pinned()
     try {
       var labels = nodes.select(col(nodeCol).as("node")).distinct()
-        .withColumn("component", col("node")).localCheckpoint()
+        .withColumn("component", col("node")).pinned()
       var converged = false
       var i = 0
       while (!converged && i < maxIter) {
@@ -664,19 +665,17 @@ object Dedup {
         // halves every label chain each round
         val parents = labels
           .select(col("node").as("p_node"), col("component").as("p_comp"))
-        val obs = new org.apache.spark.sql.Observation(s"cc_changed_$i")
-        val next = viaNbr
+        val (next, n) = Pin.step(viaNbr
           .join(parents, viaNbr("comp1") === parents("p_node"), "left")
           .select(col("node"),
             least(col("comp1"), coalesce(col("p_comp"), col("comp1")))
               .as("new_comp"),
             col("component"))
           .select(col("node"), col("new_comp").as("component"),
-            (col("new_comp") < col("component")).as("changed"))
-          .observe(obs, sum(col("changed").cast("long")).as("n_changed"))
-          .localCheckpoint()
+            (col("new_comp") < col("component")).as("changed")),
+          sum(col("changed").cast("long")))
         // sum over an empty frame is null -> converged
-        converged = obs.get.get("n_changed").forall(v => v == null || v == 0L)
+        converged = n.isNullAt(0) || n.getLong(0) == 0L
         labels = next.drop("changed")
         i += 1
       }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.operators.Pin.syntax._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -81,7 +82,7 @@ object EntityResolution {
       // with the file count (partition count follows
       // spark.sql.shuffle.partitions / AQE, no constant baked in).
       .repartition(col(idCol))
-      .localCheckpoint() // consumed by |attrs| u-aggs + both join sides
+      .pinned() // consumed by |attrs| u-aggs + both join sides
     val recs = keyed
     // exact u per attribute: collision probability of two random
     // non-null values, as the integer fraction (sum f(f-1), N(N-1))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.operators.Pin.syntax._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -104,7 +105,7 @@ object Graph {
     // checkpoint stores finished UnsafeRows (scan = iterate, no decode)
     // and still preserves the hash partitioning for the per-iteration
     // join (LogicalRDD keeps outputPartitioning).
-    val ew = e.join(deg, "src").repartition(col("src")).localCheckpoint()
+    val ew = e.join(deg, "src").repartition(col("src")).pinned()
     try {
       // per-node init rank + teleport term, computed once (tiny: |V|)
       val base = (seeds match {
@@ -119,7 +120,7 @@ object Graph {
               .as("rank"),
             when(isSeed, expr(s"(15 * ($Scale div $k)) div 100"))
               .otherwise(lit(0L)).as("tp"))
-      }).localCheckpoint()
+      }).pinned()
       var ranks = base.select(col("node"), col("rank"))
       var i = 0
       while (i < iters) {
@@ -136,9 +137,9 @@ object Graph {
         // re-optimizes stage by stage; raising the interval trades
         // scheduler round-trips for plan depth on long runs
         if (i % checkpointEvery == 0 && i < iters)
-          ranks = ranks.localCheckpoint()
+          ranks = ranks.pinned()
       }
-      ranks.localCheckpoint()
+      ranks.pinned()
     } finally { ew.unpersist(); nd.unpersist(); e.unpersist() }
   }
 
@@ -172,7 +173,7 @@ object Graph {
           greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
         .filter(col("a") < col("b"))
         .distinct()
-    var cur = raw.localCheckpoint()
+    var cur = raw.pinned()
     var curCnt = cur.count()
     var r = 0
     var fixed = curCnt == 0L
@@ -181,17 +182,13 @@ object Graph {
         .groupBy(col("node")).agg(count(lit(1)).as("d"))
       val keep = deg.filter(col("d") >= k).select(col("node"))
       // one action per round (r11): the surviving-edge count that
-      // drives the exit test rides the checkpoint job as an observed
-      // metric instead of a second full scan of the pinned frame
-      val obs = new org.apache.spark.sql.Observation(s"kcore_n_$r")
-      val next = cur
+      // drives the exit test rides the pin job as an observed metric
+      // instead of a second full scan of the pinned frame
+      val (next, n) = Pin.step(cur
         .join(keep.select(col("node").as("a")), Seq("a"), "left_semi")
         .join(keep.select(col("node").as("b")), Seq("b"), "left_semi")
-        .select(col("a"), col("b"))
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint()
-      val nextCnt = Option(obs.get.get("n").orNull)
-        .map(_.asInstanceOf[Long]).getOrElse(0L)
+        .select(col("a"), col("b")), count(lit(1)))
+      val nextCnt = n.getLong(0)
       fixed = nextCnt == curCnt || nextCnt == 0L
       cur = next
       curCnt = nextCnt
@@ -231,12 +228,12 @@ object Graph {
     // columnar cache pays a decompress per scan (see pageRank's ew note;
     // measured there). Partitioning on src survives the checkpoint.
     val e = (if (edgesDistinct) raw else raw.distinct())
-      .repartition(col("src")).localCheckpoint()
+      .repartition(col("src")).pinned()
     try {
       val nodes = e.select(explode(array(col("src"), col("dst")))
         .as("node")).distinct()
       var labels = nodes.select(col("node"), col("node").as("lab"))
-        .localCheckpoint()
+        .pinned()
       var i = 0
       while (i < iters) {
         val cnt = e.join(labels, e("src") === labels("node"))
@@ -251,10 +248,10 @@ object Graph {
           .select(labels("node"),
             coalesce(col("plab"), col("lab")).as("lab"))
         i += 1
-        if (i < iters) labels = labels.localCheckpoint()
+        if (i < iters) labels = labels.pinned()
       }
       labels.select(col("node"), col("lab").as("community"))
-        .localCheckpoint()
+        .pinned()
     } finally e.unpersist()
   }
 
@@ -310,7 +307,7 @@ object Graph {
         .crossJoin(w.deg.agg(count(lit(1)).as("n_nodes")))
       sizes.crossJoin(tri)
         .select(col("n_nodes"), col("n_edges"), col("n_triangles"))
-        .localCheckpoint()
+        .pinned()
     } finally w.und.unpersist()
   }
 
@@ -356,7 +353,7 @@ object Graph {
           when(col("d") < 2, lit(0.0d)).otherwise(
             (coalesce(col("n_tri"), lit(0L)) * 2).cast("double") /
               (col("d") * (col("d") - 1)).cast("double")).as("lcc"))
-        .localCheckpoint()
+        .pinned()
     } finally w.und.unpersist()
   }
 
@@ -389,7 +386,7 @@ object Graph {
           greatest(col(srcCol), col(dstCol)).cast("long").as("b"))
         .filter(col("a") < col("b"))
         .distinct()
-    val und = raw.localCheckpoint()
+    val und = raw.pinned()
     val sym = und.select(explode(array(
         struct(col("a").as("u"), col("b").as("v")),
         struct(col("b").as("u"), col("a").as("v")))).as("e"))
@@ -440,7 +437,7 @@ object Graph {
     // 4-11 s executor time per re-scan at sf0.1 — see pageRank's ew
     // note); the checkpoint also cuts the upstream edge-derivation
     // lineage (the co-purchase join) out of every consumer.
-    val und = raw.localCheckpoint()
+    val und = raw.pinned()
     val deg = und.select(explode(array(col("a"), col("b"))).as("node"))
       .groupBy(col("node")).agg(count(lit(1)).as("d"))
     val withDeg = und
@@ -456,7 +453,7 @@ object Graph {
           struct(col("b").as("u"), col("a").as("v"), col("da").as("dv")))
         .as("e"))
       .select(col("e.u").as("u"), col("e.v").as("v"), col("e.dv").as("dv"))
-      .localCheckpoint()
+      .pinned()
     val w1 = oriented.select(col("u"), col("v").as("v1"),
       col("dv").as("dv1"))
     val w2 = oriented.select(col("u"), col("v").as("v2"),
@@ -491,35 +488,32 @@ object Graph {
   def shortestHops(edges: DataFrame, srcCol: String, dstCol: String,
       seeds: DataFrame, seedCol: String, maxHops: Int): DataFrame = {
     require(maxHops >= 0 && maxHops <= 50, s"maxHops=$maxHops out of [0,50]")
-    // r11 a/b REJECTED a partitioned pin here (AQE-off repartition+sort
-    // on src, Pin.workingSetPartitioned): 2.99 -> 3.88 s at sf0.1/32c.
+    // r11 a/b REJECTED a partitioned pin here (repartition+sort on src
+    // pinned with AQE off): 2.99 -> 3.88 s at sf0.1/32c.
     // The frontier side is small enough that AQE broadcasts it, so the
     // pinned layout is never probed by a sort-merge join and the extra
     // exchange+sort in the pin is pure cost.
     val e = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
-      .repartition(col("src")).localCheckpoint()
+      .repartition(col("src")).pinned()
     var visited = seeds.select(col(seedCol).cast("long").as("node"))
       .where(col("node").isNotNull).distinct()
-      .withColumn("hops", lit(0L)).localCheckpoint()
+      .withColumn("hops", lit(0L)).pinned()
     var frontier = visited.select(col("node"))
     var h = 0L
     var done = frontier.isEmpty
     while (h < maxHops && !done) {
       h += 1
       // ONE action per round (r11): the frontier-size probe rides the
-      // checkpoint job as an observed metric (the CC loop's pattern) —
-      // the separate isEmpty action and the per-round re-checkpoint of
-      // the whole visited set (an O(|V|) copy each round) are gone; the
-      // anti-join scans the lazy union of the pinned per-hop legs.
-      val obs = new org.apache.spark.sql.Observation(s"bfs_next_$h")
-      val next = frontier.join(e, col("node") === col("src"))
+      // pin job as an observed metric (the CC loop's pattern) — the
+      // separate isEmpty action and the per-round re-pin of the whole
+      // visited set (an O(|V|) copy each round) are gone; the anti-join
+      // scans the lazy union of the pinned per-hop legs.
+      val (next, n) = Pin.step(frontier.join(e, col("node") === col("src"))
         .select(col("dst").as("node")).distinct()
         .join(visited, Seq("node"), "left_anti")
-        .withColumn("hops", lit(h))
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint()
-      done = obs.get.get("n").forall(v => v == null || v == 0L)
+        .withColumn("hops", lit(h)), count(lit(1)))
+      done = n.getLong(0) == 0L
       visited = visited.unionByName(next)
       frontier = next.select(col("node"))
     }
@@ -548,25 +542,22 @@ object Graph {
       s"maxHops=$maxHops out of [1,50]")
     val e = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"))
-      .repartition(col("src")).localCheckpoint()
+      .repartition(col("src")).pinned()
     var visited = seeds.select(col(seedCol).cast("long").as("seed"))
       .where(col("seed").isNotNull).distinct()
       .select(col("seed"), col("seed").as("node"),
-        lit(0L).as("hops")).localCheckpoint()
+        lit(0L).as("hops")).pinned()
     var frontier = visited.select(col("seed"), col("node"))
     var h = 0L
     var done = frontier.isEmpty
     while (h < maxHops && !done) {
       h += 1
       // one action per round — see shortestHops (r11)
-      val obs = new org.apache.spark.sql.Observation(s"closeness_next_$h")
-      val next = frontier.join(e, col("node") === col("src"))
+      val (next, n) = Pin.step(frontier.join(e, col("node") === col("src"))
         .select(col("seed"), col("dst").as("node")).distinct()
         .join(visited, Seq("seed", "node"), "left_anti")
-        .withColumn("hops", lit(h))
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint()
-      done = obs.get.get("n").forall(v => v == null || v == 0L)
+        .withColumn("hops", lit(h)), count(lit(1)))
+      done = n.getLong(0) == 0L
       visited = visited.unionByName(next)
       frontier = next.select(col("seed"), col("node"))
     }
@@ -601,10 +592,10 @@ object Graph {
     val e = edges.select(col(srcCol).cast("long").as("src"),
         col(dstCol).cast("long").as("dst"),
         col(weightCol).cast("long").as("w"))
-      .repartition(col("src")).localCheckpoint()
+      .repartition(col("src")).pinned()
     var dist = seeds.select(col(seedCol).cast("long").as("node"))
       .where(col("node").isNotNull).distinct()
-      .withColumn("cost", lit(0L)).localCheckpoint()
+      .withColumn("cost", lit(0L)).pinned()
     var frontier = dist
     var h = 0
     var done = frontier.isEmpty
@@ -614,21 +605,18 @@ object Graph {
         .select(col("dst").as("node"), (col("cost") + col("w")).as("c"))
         .groupBy(col("node")).agg(min(col("c")).as("cand_cost"))
       // one action for the improved-set probe — see shortestHops (r11)
-      val obs = new org.apache.spark.sql.Observation(s"bf_improved_$h")
-      val improved = cand
+      val (improved, n) = Pin.step(cand
         .join(dist.withColumnRenamed("cost", "cur"), Seq("node"), "left")
         .filter(col("cur").isNull || col("cand_cost") < col("cur"))
-        .select(col("node"), col("cand_cost").as("cost"))
-        .observe(obs, count(lit(1)).as("n"))
-        .localCheckpoint()
-      done = obs.get.get("n").forall(v => v == null || v == 0L)
+        .select(col("node"), col("cand_cost").as("cost")), count(lit(1)))
+      done = n.getLong(0) == 0L
       dist = dist.withColumnRenamed("cost", "a")
         .join(improved.withColumnRenamed("cost", "b"), Seq("node"),
           "full_outer")
         .select(col("node"),
           least(coalesce(col("a"), col("b")), coalesce(col("b"), col("a")))
             .as("cost"))
-        .localCheckpoint()
+        .pinned()
       frontier = improved
     }
     dist
@@ -662,29 +650,25 @@ object Graph {
     // localCheckpoint, not cache(): scanned TWICE per round (auth and
     // hub half-rounds) — the per-scan columnar decode dominates (see
     // pageRank's ew note)
-    val e = (if (edgesDistinct) raw else raw.distinct()).localCheckpoint()
+    val e = (if (edgesDistinct) raw else raw.distinct()).pinned()
     try {
       val nodes = e.select(explode(array(col("src"), col("dst")))
-        .as("node")).distinct().localCheckpoint()
-      var halfRound = 0
+        .as("node")).distinct().pinned()
       def normalized(rawScores: DataFrame, keyed: String, out: String) = {
         // ONE action per half-round (r11, the Bradley-Terry pattern):
-        // the raw per-node sums (|V| rows) checkpoint once — without
+        // the raw per-node sums (|V| rows) are pinned once — without
         // the cut the half-round's |E| join would execute twice
         // (measured ~2x the whole operator in r9) — and the L1 total
         // rides that SAME job as an observed metric, landing in the
         // normalize projection as a literal. The old shape ran a
         // second checkpoint action per half-round plus a broadcast
         // cross-join just to move the one scalar. The normalize join
-        // itself stays lazy: its single consumer is the next
-        // half-round's pinned aggregate (or the final join).
-        halfRound += 1
-        val obs = new org.apache.spark.sql.Observation(
-          s"hits_tot_$halfRound")
-        val raw = rawScores.observe(obs, sum(col("s")).as("t"))
-          .localCheckpoint()
-        val t = Option(obs.get.get("t").orNull)
-          .map(_.asInstanceOf[Long]).getOrElse(0L)
+        // itself stays lazy: each round's frame is consumed by the
+        // next half-round's pinned aggregate, and the final round's
+        // auth ALSO by the returned join — one extra evaluation of a
+        // |V|-row join between two pinned frames, cheaper than a pin.
+        val (raw, tot) = Pin.step(rawScores, sum(col("s")))
+        val t = if (tot.isNullAt(0)) 0L else tot.getLong(0)
         val normalize =
           if (t != 0L) nodes.join(raw, nodes("node") === raw(keyed), "left")
             .select(nodes("node"), expr(
@@ -756,7 +740,7 @@ object Graph {
     // localCheckpoint, not cache(): scanned by the degree agg, the
     // center filter and both wedge sides — per-scan decode dominates
     // (see pageRank's ew note)
-    val e = raw.distinct().localCheckpoint()
+    val e = raw.distinct().pinned()
     try {
       val deg = e.groupBy(col("src").as("node"))
         .agg(count(lit(1)).as("deg"))
@@ -848,7 +832,7 @@ object Graph {
         col(dstCol).cast("long").as("dst"))
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct()
-      .localCheckpoint()
+      .pinned()
     // ONE groupBy, bounded state: deg + `perms` running mins per node —
     // min(h(n) for n in set) == min-aggregate over the (distinct) edge
     // rows; state is |V| x (perms+1) longs, never a neighbor array.
@@ -860,7 +844,7 @@ object Graph {
       }
     val sigs = e.groupBy(col("src").as("node"))
       .agg(sigAggs.head, sigAggs.tail: _*)
-      .localCheckpoint() // |V| x (perms+1) longs; makes the hub probe
+      .pinned() // |V| x (perms+1) longs; makes the hub probe
                          // and the deg joins O(|V|) re-reads
     // band key: each slot value is < P, so a band of rows<=2 packs
     // INJECTIVELY into one long (sig0*P + sig1 < P^2 < 2^62) — same
@@ -1032,8 +1016,8 @@ object Graph {
     * Output: (start, rep, step, node) — step 0 is the start node itself.
     *
     * Scale shape: the ranked adjacency (one window pass over the edge
-    * set: 0-based dst-rank + out-degree) is built ONCE, pre-partitioned
-    * on its (src, rk) probe key and cached — each of the walkLen steps
+    * set: 0-based dst-rank + out-degree) is built and pinned ONCE —
+    * each of the walkLen steps
     * then shuffles ONLY the frontier (|V| x walksPerNode rows, never
     * |E|): one join against the degree table to form the draw index and
     * one composite-key probe that lands a single adjacency row per
@@ -1058,19 +1042,10 @@ object Graph {
     // the frontier then knows its current node's degree without a
     // per-step degree join — ONE probe join per step, the other half
     // paid once at build time
-    // EXPLICIT partition count: an un-numbered repartition(col...) is
-    // AQE-coalescible, and the coalesced partitioning does NOT survive
-    // as a join-compatible HashPartitioning through the checkpoint — so
-    // every step re-shuffled the FULL adjacency (measured 154 MB of
-    // per-step exchange at sf0.1; the probe join was supposed to move
-    // only the frontier). Numbered repartitions are left alone by AQE,
-    // and the count follows the session shuffle-partition conf, so it
-    // stays scale-adaptive. The sortWithinPartitions pins the (src, rk)
-    // ordering so the per-step sort-merge probe skips its adjacency-
-    // side sort too (checkpoint preserves outputOrdering).
     // pinned WITHOUT a probe-key repartition: the layout exchange never
-    // survived the AQE-built checkpoint (the scan reports Unknown
-    // partitioning — see Pin.workingSetPartitioned), so the per-step
+    // survived the AQE-built checkpoint (`Dataset.localCheckpoint`
+    // records the physical plan's output partitioning, and an
+    // `AdaptiveSparkPlanExec` reports Unknown), so the per-step
     // probe join re-exchanges the adjacency regardless and the build-
     // time repartition was pure waste; a/b'd against both a partitioned
     // two-stage pin (worse: double materialization) and an AQE-off pin
@@ -1081,14 +1056,14 @@ object Graph {
         col("dst"))
       .join(degs.select(col("node").as("dst"),
         col("deg").as("dst_deg")), Seq("dst"), "left")
-      .localCheckpoint()
+      .pinned()
     try {
       val reps = explode(sequence(lit(0), lit(walksPerNode - 1))).as("rep")
       var frontier = degs
         .select(col("node").as("start"), reps, col("deg"))
         .select(col("start"), col("rep").cast("long").as("rep"),
           col("start").as("cur"), col("deg").as("cur_deg"))
-        .localCheckpoint()
+        .pinned()
       val out = Seq.newBuilder[DataFrame]
       out += frontier.select(col("start"), col("rep"),
         lit(0L).as("step"), col("cur").as("node"))
@@ -1104,7 +1079,7 @@ object Graph {
             idx("cur") === adj("src") && idx("idx") === adj("rk"))
           .select(col("start"), col("rep"), col("dst").as("cur"),
             col("dst_deg").as("cur_deg"))
-          .localCheckpoint()
+          .pinned()
         t += 1
         out += frontier.select(col("start"), col("rep"),
           lit(t.toLong).as("step"), col("cur").as("node"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.operators.Pin.syntax._
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, lit, sum}
 import org.apache.spark.sql.types.{LongType, StructField, StructType}
@@ -49,7 +50,7 @@ object Ids {
     // the range exchange and window would execute twice (r10
     // optimization — measured 2x on abc_classification's revenue agg)
     val local = parted.withColumn("__run", sum(v).over(w))
-      .localCheckpoint()
+      .pinned()
     val totals = local.groupBy(col("__pid"))
       .agg(sum(v).as("__tot")).orderBy(col("__pid")).collect()
     val spark = df.sparkSession
@@ -121,7 +122,7 @@ object Ids {
         n => df.repartitionByRange(n, order: _*))
       .sortWithinPartitions(order: _*)
       .withColumn("__dg_mid", monotonically_increasing_id())
-      .localCheckpoint()
+      .pinned()
     val sizes = parted
       .groupBy(shiftrightunsigned(col("__dg_mid"), 33).as("__dg_pid"))
       .agg(count(lit(1)).as("__dg_n"))

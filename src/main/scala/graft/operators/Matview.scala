@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.operators.Pin.syntax._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -121,7 +122,7 @@ object Matview {
     // the lake's upsert/merge machinery (key probe, staging, stats,
     // commit retry) evaluates its input several times — lazily each
     // evaluation would re-run the CDC diffs and both maintenance joins
-    val d = delta.localCheckpoint()
+    val d = delta.pinned()
     val inserts = d.filter(col("__op") === "I").drop("__op")
     val pureDeletes = d.filter(col("__op") === "D")
       .join(inserts.select(keys.map(col): _*), keys, "left_anti")

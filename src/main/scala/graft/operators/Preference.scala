@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.operators.Pin.syntax._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -46,18 +47,18 @@ object Preference {
     // directed win counts, then the symmetric games-per-ordered-pair
     // table (i, j, n_ij) and per-item win totals
     val wins = wl.groupBy(col("w"), col("l")).agg(count(lit(1)).as("n"))
-      .localCheckpoint()
+      .pinned()
     val sym = wins.select(col("w").as("i"), col("l").as("j"), col("n"))
       .unionByName(wins.select(col("l").as("i"), col("w").as("j"),
         col("n")))
       .groupBy(col("i"), col("j")).agg(sum(col("n")).as("nij"))
-      .localCheckpoint()
-    val items = sym.select(col("i")).distinct().localCheckpoint()
+      .pinned()
+    val items = sym.select(col("i")).distinct().pinned()
     val totW = items.join(
         wins.groupBy(col("w")).agg(sum(col("n")).as("wins")),
         items("i") === col("w"), "left")
       .select(col("i"), coalesce(col("wins"), lit(0L)).as("wins"))
-      .localCheckpoint()
+      .pinned()
     // |items| once, before the loop — it never changes, and the old
     // per-round broadcast cross-join re-aggregated it every round
     val nItems = items.count()
@@ -77,16 +78,21 @@ object Preference {
       // int64 when |items| is huge) and lands in the next projection as
       // a LITERAL — the old shape ran a second checkpoint plus two
       // broadcast cross-joins per round to move two scalars
-      val obs = new org.apache.spark.sql.Observation(s"bt_tot_$r")
-      val raw = totW.join(scored, "i")
+      val (raw, obs) = Pin.step(totW.join(scored, "i")
         .withColumn("__pn",
           when(col("__S") > 0,
             expr(s"(CAST(wins AS DECIMAL(38,0)) * $Scale2) div __S"))
-            .otherwise(0L))
-        .observe(obs, sum(col("__pn").cast("decimal(38,0)")).as("__tot"))
-        .localCheckpoint()
-      val tot = Option(obs.get.get("__tot").orNull)
-        .map(_.toString).filter(_ != "0").getOrElse("1") // empty frame
+            .otherwise(0L)),
+        sum(col("__pn").cast("decimal(38,0)")))
+      // null: no comparisons at all (no rows to normalize). A zero total
+      // over a non-empty frame would mean every strength collapsed to 0
+      // (MM keeps the strongest winner positive, so it should not
+      // happen) and the next round would divide by p_i + p_j = 0
+      val tot =
+        if (obs.isNullAt(0)) BigDecimal(1)
+        else BigDecimal(obs.getDecimal(0))
+      if (tot.signum == 0) throw new IllegalStateException(
+        s"bradleyTerry: every strength is 0 after round ${r + 1}")
       p = raw.select(col("i"),
         expr(s"CAST((CAST(__pn AS DECIMAL(38,0)) * $nItems * $Scale)" +
           s" div CAST('$tot' AS DECIMAL(38,0)) AS BIGINT)").as("p"))

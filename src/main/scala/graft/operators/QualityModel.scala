@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.operators.Pin.syntax._
 import org.apache.spark.ml.classification.{LogisticRegression, LogisticRegressionModel}
 import org.apache.spark.ml.feature.HashingTF
 import org.apache.spark.sql.{Column, DataFrame}
@@ -128,7 +129,7 @@ object QualityModel {
         when(col("n_bigrams") > 0,
           col("score").cast("double") / col("n_bigrams")).otherwise(0.0))
       .select(col(idCol), col("__qm_lm"))
-      .localCheckpoint()
+      .pinned()
     // exact quartile fences, one 2-double row broadcast back onto the
     // corpus (the iqrOutliers pattern) — no global sort, no window
     val fences = lm.agg(

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.operators.Pin.syntax._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -71,7 +72,7 @@ object SequenceModel {
     // ONE window pass: persist the transition stream so the model fit
     // and the scoring join share it instead of re-shuffling the events
     val tr = transitions(events, userCol, tsCol, tieCol, typeCol)
-      .localCheckpoint()
+      .pinned()
     val model = broadcast(modelOfTransitions(tr))
     tr.join(model, Seq("__prev", "__next"))
       .groupBy(col("__u"))

@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.operators.Pin.syntax._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -645,7 +646,7 @@ object Similarity {
     // pin the quantized training set ONCE (r11): the init collect plus
     // every Lloyd iteration's treeAggregate otherwise re-executes the
     // upstream scan + quantize cast per action (iters+1 re-executions)
-    val base = graft.operators.Pin.workingSet(base0)
+    val base = base0.pinned()
     val initRows = base.orderBy(col("vec_id")).limit(k)
       .select(col("q4")).collect().map(_.getSeq[Long](0).toArray)
     var books: Array[Array[Array[Long]]] = Array.tabulate(m)(s =>
@@ -696,7 +697,7 @@ object Similarity {
       dim: Int): Array[Array[Long]] = {
     require(k >= 1 && iters >= 0)
     // pinned once — see kMeansIntSubspaces (r11)
-    val q = graft.operators.Pin.workingSet(q0)
+    val q = q0.pinned()
     var cents: Array[Array[Long]] = q.orderBy(col("vec_id")).limit(k)
       .select(col("q4")).collect().map(_.getSeq[Long](0).toArray)
     var t = 0
@@ -1309,7 +1310,7 @@ object Similarity {
     // finished rows
     val vecs = df.select(col("vec_id"),
       transform(col("embedding"), _.cast("double")).as("v"))
-      .localCheckpoint()
+      .pinned()
     try {
       var centers: Array[Seq[Double]] = vecs.orderBy(col("vec_id")).limit(k)
         .select(col("v")).collect()
@@ -1625,7 +1626,7 @@ object Similarity {
     // (see kMeansCodebook's note)
     val sub = trainSet
       .select(col("vec_id"), posexplode(subs).as(Seq("s", "v")))
-      .localCheckpoint()
+      .pinned()
     try {
       var centers: Array[Array[Seq[Double]]] = {
         val rows = trainSet.orderBy(col("vec_id")).limit(kCodes)

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.FixedLogFunctions.log2_fp
+import graft.operators.Pin.syntax._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -48,7 +49,7 @@ object Survival {
       .agg(sum(col("__e")).as("n_events"),
         sum(lit(1L) - col("__e")).as("n_censored"),
         count(lit(1)).as("__all"))
-      .localCheckpoint()
+      .pinned()
     val total = perDur.agg(sum(col("__all")).as("__n"))
     // at risk at step t = subjects with duration >= t: total minus the
     // EXCLUSIVE prefix count (inclusive cum minus own row)

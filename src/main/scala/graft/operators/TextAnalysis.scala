@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.operators.Pin.syntax._
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -185,7 +186,7 @@ object TextAnalysis {
       .filter(col("__sc_df") <= maxDf)
       .select(col(idCol).as("__sc_id"), col("__sc_t"),
         (col("__sc_tf") * expr(s"$scale div __sc_df")).as("__sc_w"))
-      .localCheckpoint()
+      .pinned()
     val norms = w.groupBy(col("__sc_id"))
       .agg(sum(col("__sc_w") * col("__sc_w")).as("__sc_n2"))
     val pairs = w.as("a").join(w.as("b"),

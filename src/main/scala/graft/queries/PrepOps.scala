@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.Tables
+import graft.operators.Pin.syntax._
 import graft.operators.{Decontaminate, Dedup, Sampling, Scrub, TextAnalysis, Urls}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -305,7 +306,7 @@ object PrepOps {
       val canon = gated.withColumn("url_canon",
           Urls.canonicalize(col("url")))
         .select(col("doc_id"), col("url_canon"), col("text_norm"))
-        .localCheckpoint()
+        .pinned()
       val urlKept = canon.join(
         canon.groupBy(col("url_canon")).agg(min(col("doc_id")).as("doc_id")),
         Seq("doc_id", "url_canon"), "left_semi")

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{ColUtil, Tables}
 import graft.ColUtil._
+import graft.operators.Pin.syntax._
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -722,7 +723,7 @@ object Relational {
         .groupBy(col("l_partkey"))
         .agg(sum(money(col("l_extendedprice")) *
           frac(lit(1) - col("l_discount"))).as("rev"))
-        .localCheckpoint()
+        .pinned()
       val cum = graft.operators.Ids.prefixSum(rev,
         Seq(col("rev").desc, col("l_partkey")), col("rev"), "cum_rev")
       val tot = rev.agg(sum(col("rev")).as("total_rev"))

@@ -3,6 +3,7 @@ package graft.queries
 import java.io.ByteArrayInputStream
 
 import graft.Tables
+import graft.operators.Pin.syntax._
 import graft.operators.{Bloom, Decontaminate, TextAnalysis}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -1556,7 +1557,7 @@ object SketchOps {
       val feed = s.read.format("graft")
         .option("readChangeFeed", "true").option("changeFeedKeys", "k")
         .option("startingVersion", baseV).load(s"$wh/t")
-        .localCheckpoint() // pin: the matview + audit read it twice
+        .pinned() // pin: the matview + audit read it twice
       // incremental matview: apply the feed to the PRE-merge snapshot
       import org.apache.spark.sql.expressions.Window
       val w = Window.partitionBy("k").orderBy(col("_commit_version").desc)

@@ -463,8 +463,9 @@ object StreamOps {
 
     // late-data accounting end to end: the corpus replays as THREE
     // ordered micro-batches (1/2, 1/4, 1/4 by event_id % 4 — seeds,
-    // watermark-advancer, late tail). Probed Spark semantics
-    // (tools.LateProbe): the watermark batch N runs under is
+    // watermark-advancer, late tail). Spark semantics (pinned at the
+    // boundary by StreamingSpec "late rows beyond the watermark are
+    // dropped"): the watermark batch N runs under is
     // computed at batch N-1's close (max event time - delay); windows
     // whose end <= that watermark were EVICTED at batch close, so a
     // batch-2 row into such a window DROPS (numRowsDroppedByWatermark)
@@ -1135,7 +1136,8 @@ object StreamOps {
       """SELECT event_type, COUNT(DISTINCT user_id) AS n_users
         |FROM events GROUP BY 1 ORDER BY event_type""".stripMargin,
 
-    // three-batch watermark replay (probed semantics, tools.LateProbe):
+    // three-batch watermark replay (semantics pinned by StreamingSpec
+    // "late rows beyond the watermark are dropped"):
     // windows whose end <= max(b1 time) - 10min are EVICTED at b2's
     // close (b2 itself merges into still-live states); b3 rows into
     // those evicted windows DROP; the final watermark over all rows

@@ -1,5 +1,6 @@
 package graft.sinks
 
+import graft.operators.Pin.syntax._
 import java.nio.charset.StandardCharsets
 import java.util.UUID
 
@@ -1664,7 +1665,7 @@ object VersionedTable {
     val schema = manifest(f, root, vs.max).schema
     val delKeys = keyRows
       .select(keys.map(k => col(k).as("__dk_" + k)): _*)
-      .distinct().localCheckpoint()
+      .distinct().pinned()
     def cond(left: DataFrame): Column =
       keys.map(k => left(k) <=> delKeys("__dk_" + k)).reduce(_ && _)
     var lastStaged: Seq[String] = Seq.empty
@@ -1709,10 +1710,11 @@ object VersionedTable {
     * (no row-hash collisions); rows identical in both snapshots are
     * dropped. One key-shuffle full-outer join — the unavoidable cost of
     * row-level CDC without per-commit change logs; consumers that only
-    * need appended rows should instead read the manifests' added files. */
-  /** Exact keyed CDC between two snapshots. CONTRACT (caller-facing):
-    * snapshots must be key-unique and the lake copy-on-write — the
-    * churned-files-only read below is exact ONLY under that contract.
+    * need appended rows should instead read the manifests' added files.
+    *
+    * CONTRACT (caller-facing): snapshots must be key-unique and the
+    * lake copy-on-write — the churned-files-only read below is exact
+    * ONLY under that contract.
     * If it is violated (e.g. a plain append adds a second row for an
     * existing key whose old row sits in a file both manifests share),
     * the shared file is invisible to the diff and the new row reports
@@ -2698,7 +2700,7 @@ object VersionedTable {
     val classified = j.withColumn("__take",
         fChanged && !iChanged)
       .withColumn("__conflict", iChanged && fChanged && !convergent)
-      .localCheckpoint()
+      .pinned()
     val conflictCols: Seq[Column] = keys.map(col) ++
       dataCols.map(c => col("into_" + c)) ++ Seq(col("into_present")) ++
       dataCols.map(c => col("from_" + c)) ++ Seq(col("from_present"))

@@ -3,11 +3,11 @@ package graft.sources
 import graft.operators.split.RangeSplitter
 
 /** Assembled JDBC read plan — the reference reader job's parameter
-  * assembly (/root/reference/database/dbms/reader/job.go:121-186 +
-  * parameter.go:94-120) as a pure function: dialect scan SQL + split
-  * predicates + user-WHERE composition `(user) and (split)`, in exactly
-  * the shape `spark.read.jdbc(url, table, predicates, props)` consumes
-  * (one partition per predicate). No DBMS is needed to verify the
+  * assembly (reference database/dbms/reader/job.go:121-186 +
+  * parameter.go:94-120) as a pure function: dialect scan SQL (the user
+  * WHERE inside it) + split predicates, in exactly the shape
+  * `spark.read.jdbc(url, table, predicates, props)` consumes (one
+  * partition per predicate). No DBMS is needed to verify the
   * assembly — the builders are side-effect-free, like the reference's.
   */
 final case class JdbcScanPlan(
@@ -28,25 +28,22 @@ object JdbcReadPlan {
     * Mode precedence mirrors the reference Split()
     * (job.go:123-142): querySql beats everything (one statement per
     * entry, no split); a missing split key or numPartitions <= 1 reads
-    * unsplit; otherwise equal-width slices ANDed with the user WHERE. */
+    * unsplit; otherwise equal-width slices over the filtered statement.
+    * The user WHERE stays INSIDE the statement even when split: Spark
+    * wraps the statement as a subquery and applies the slice predicates
+    * outside it, where only the projected columns exist — a WHERE on an
+    * unprojected column would not resolve there. */
   def plan(cfg: ReaderConfig, dialect: SqlDialect,
       bounds: Option[(BigInt, BigInt)],
       quote: BigInt => String = _.toString): JdbcScanPlan = {
     if (cfg.querySql.nonEmpty)
       return JdbcScanPlan(cfg.querySql, Seq.empty)
-    val base = dialect.scanSql(cfg.table, cfg.columns,
-      Seq(cfg.where).filter(_.nonEmpty))
+    val base = dialect.scanSql(cfg.table, cfg.columns, Seq(cfg.where))
     if (cfg.split.key.isEmpty || cfg.numPartitions <= 1 || bounds.isEmpty)
       return JdbcScanPlan(Seq(base), Seq.empty)
     val (mn, mx) = bounds.get
     val slices = RangeSplitter.split(mn, mx, cfg.numPartitions)
-    val splitPreds = RangeSplitter.predicateSql(
-      dialect.quote(cfg.split.key), slices, quote)
-    // `(user) and (split)` composition, reference job.go:179-181
-    val preds =
-      if (cfg.where.isEmpty) splitPreds
-      else splitPreds.map(p => s"(${cfg.where}) and ($p)")
-    JdbcScanPlan(
-      Seq(dialect.scanSql(cfg.table, cfg.columns, Seq.empty)), preds)
+    JdbcScanPlan(Seq(base), RangeSplitter.predicateSql(
+      dialect.quote(cfg.split.key), slices, quote))
   }
 }

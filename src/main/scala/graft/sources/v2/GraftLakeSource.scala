@@ -660,11 +660,17 @@ private[v2] class GraftScanBuilder(spark: SparkSession,
   * Runtime filters are semantically redundant (the join re-checks), so
   * conservative pruning can never change results; an oversized IN list
   * (> [[GraftScan.MaxRuntimeInValues]] values) skips re-pruning rather
-  * than burn O(|files|·|values|) driver time. */
+  * than burn O(|files|·|values|) driver time.
+  *
+  * `pruneOnly` (the row-level rewrite scan): predicates only choose
+  * FILES; every row of a kept file is read. A copy-on-write rewrite
+  * replaces whole files, so parquet row-group/page filtering there would
+  * silently drop the non-matching rows it must carry over. */
 private[graft] class GraftScan(spark: SparkSession,
     snap: VersionedTable.Snapshot, pushedCond: Option[Column],
     required: StructType, limit: Option[Int] = None,
-    filterAttrOverride: Option[Seq[String]] = None)
+    filterAttrOverride: Option[Seq[String]] = None,
+    pruneOnly: Boolean = false)
     extends Scan with org.apache.spark.sql.connector.read.Batch
     with org.apache.spark.sql.connector.read.SupportsRuntimeFiltering
     with org.apache.spark.sql.connector.read.SupportsReportStatistics {
@@ -744,7 +750,7 @@ private[graft] class GraftScan(spark: SparkSession,
     // forward the same predicate (resolved against the snapshot schema,
     // attributes translated to physical names) so parquet row-group/
     // page stats and dictionary filters also apply
-    cond.foreach { c =>
+    if (!pruneOnly) cond.foreach { c =>
       VersionedTable.resolvePredicate(spark, snap.schema, c)
         .map(_.transform {
           case a: org.apache.spark.sql.catalyst.expressions

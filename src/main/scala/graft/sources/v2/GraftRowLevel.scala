@@ -17,13 +17,15 @@ import graft.sinks.VersionedTable
   * lake; Delta/Iceberg COW make the same choice):
   *
   *  1. Spark plans the rewrite over this operation's scan. The scan is
-  *     the standard [[GraftScan]]: static pushed filters prune files by
-  *     manifest stats, and — because it supports runtime filtering —
-  *     Spark's row-level RUNTIME GROUP FILTERING feeds the matching
-  *     rows' join keys back in at execution, re-running `pruneFiles` so
-  *     only files that can possibly hold matches become rewrite groups
-  *     (a 100 TB MERGE touching one key range rewrites a handful of
-  *     files, not the table).
+  *     the standard [[GraftScan]] in prune-only mode: static pushed
+  *     filters prune files by manifest stats (never rows — a rewritten
+  *     file's unmatched rows must be carried), and — because it
+  *     supports runtime filtering — Spark's row-level RUNTIME GROUP
+  *     FILTERING feeds the matching rows' join keys back in at
+  *     execution, re-running `pruneFiles` so only files that can
+  *     possibly hold matches become rewrite groups (a 100 TB MERGE
+  *     touching one key range rewrites a handful of files, not the
+  *     table).
   *  2. The rewrite query computes the scanned groups' FULL new content
   *     (carried rows + updates + inserts − deletes); executors stage it
   *     as raw parquet through Spark's own OutputWriter
@@ -137,7 +139,7 @@ private[v2] class GraftRowLevelScanBuilder(spark: SparkSession,
           .map(f => Seq(f.name)))
     op.groupFilterAttr = groupAttr.map(_.mkString(",")).getOrElse("none")
     val scan = new GraftScan(spark, snap, cond, required,
-      filterAttrOverride = groupAttr)
+      filterAttrOverride = groupAttr, pruneOnly = true)
     // FIRST build wins: the rewrite plan's main scan is planned by
     // GroupBasedRowLevelOperationScanPlanning before the optimizer
     // fabricates the runtime group-filter SUBQUERY (whose relation

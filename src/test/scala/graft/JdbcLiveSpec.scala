@@ -72,6 +72,26 @@ class JdbcLiveSpec extends SparkSpec {
       == (10L until 100L).sum)
   }
 
+  test("live split read: the user WHERE may filter on an unprojected column") {
+    val url = memUrl("wheredb")
+    exec(url, """create table "w"("id" bigint, "grp" bigint)""")
+    withConn(url) { c =>
+      Using.resource(c.prepareStatement("""insert into "w" values (?, ?)""")) {
+        ps => (0 until 100).foreach { i =>
+          ps.setLong(1, i.toLong); ps.setLong(2, i % 3L); ps.executeUpdate()
+        }
+      }
+    }
+    val cfg = ReaderConfig(columns = Seq("id"), table = TableId(name = "w"),
+      where = "\"grp\" = 0",
+      split = SplitConfig(key = "id"), numPartitions = 4)
+    val df = JdbcLive.read(spark, url, cfg, d)
+    assert(df.rdd.getNumPartitions == 4)
+    assert(df.columns.toSeq == Seq("id"))
+    assert(df.collect().map(_.getLong(0)).sorted.toSeq ==
+      (0L until 100L).filter(_ % 3 == 0))
+  }
+
   test("live bounds probe: empty table -> None -> unsplit plan") {
     val url = memUrl("emptydb")
     exec(url, """create table "e"("id" bigint)""")

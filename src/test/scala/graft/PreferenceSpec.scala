@@ -43,6 +43,10 @@ class PreferenceSpec extends SparkSpec {
     assert(m("A")._2 > 0L && m("B")._2 > 0L)
   }
 
+  test("no comparisons: no items, no strengths") {
+    assert(Preference.bradleyTerry(games(), $"w", $"l").count() == 0L)
+  }
+
   test("L1 normalization and bit-stability under repartitioning") {
     val df = games(("A", "B", 7), ("B", "A", 3), ("B", "C", 6),
       ("C", "B", 4), ("C", "D", 5), ("D", "C", 5), ("A", "D", 2),

@@ -341,6 +341,57 @@ class RowLevelSpec extends SparkSpec {
     spark.catalog.dropTempView("mse_src")
   }
 
+  test("UPDATE, DELETE and MERGE carry every unmatched row of a " +
+      "rewritten multi-page file") {
+    // compact -> one 30000-row file, i.e. two parquet pages (20000-row
+    // page limit); a predicate forwarded to the parquet reader would
+    // skip the page holding no match and lose its rows in the rewrite
+    def multiPage(name: String): Unit = {
+      warehouse
+      val root = s"$warehouse/$name"
+      def rows(lo: Long, hi: Long) = spark.range(lo, hi)
+        .select(col("id").as("k"), (col("id") * 2).as("v"),
+          lit("base").as("tag"))
+      (0 until 3).foreach(b => VersionedTable.append(
+        rows(b * 10000L + 1, b * 10000L + 10001).coalesce(1), root))
+      VersionedTable.compact(spark, root)
+      VersionedTable.upsert(rows(30001, 30021), root, Seq("k"))
+    }
+    def countSum(t: String) = spark.sql(
+      s"SELECT count(*), sum(v) FROM grl.$t").head()
+    val allV = (1L to 30020L).map(_ * 2).sum
+    val hit = 600L to 640L
+
+    multiPage("pg_upd")
+    spark.sql("UPDATE grl.pg_upd SET v = v + 1, tag = 'upd' " +
+      "WHERE k BETWEEN 600 AND 640")
+    val u = countSum("pg_upd")
+    assert(u.getLong(0) == 30020L && u.getLong(1) == allV + hit.size,
+      s"UPDATE lost rows: $u")
+
+    multiPage("pg_del")
+    spark.sql("DELETE FROM grl.pg_del " +
+      "WHERE k BETWEEN 600 AND 640 AND k % 2 = 0")
+    val evens = hit.filter(_ % 2 == 0)
+    val d = countSum("pg_del")
+    assert(d.getLong(0) == 30020L - evens.size &&
+      d.getLong(1) == allV - evens.map(_ * 2).sum, s"DELETE lost rows: $d")
+
+    // a value group filter reaches the scan as a RUNTIME condition
+    multiPage("pg_mrg")
+    hit.map(k => (k, -1L)).toDF("k", "nv").createOrReplaceTempView("pg_src")
+    spark.conf.set("spark.graft.rowlevel.groupFilterColumn", "k")
+    try spark.sql(
+      """MERGE INTO grl.pg_mrg t USING pg_src s ON t.k = s.k
+        |WHEN MATCHED THEN UPDATE SET v = s.nv""".stripMargin)
+    finally spark.conf.unset("spark.graft.rowlevel.groupFilterColumn")
+    spark.catalog.dropTempView("pg_src")
+    val m = countSum("pg_mrg")
+    assert(m.getLong(0) == 30020L &&
+      m.getLong(1) == allV - hit.map(k => k * 2 + 1).sum,
+      s"MERGE lost rows: $m")
+  }
+
   test("row-level commits are ordinary history entries: vacuum-able, " +
       "restore-able") {
     val root = freshTable("his")

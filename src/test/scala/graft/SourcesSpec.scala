@@ -172,7 +172,7 @@ class SourcesSpec extends SparkSpec {
     val plan = JdbcReadPlan.plan(rc.copy(numPartitions = 2), MySqlStyle,
       bounds = Some((BigInt(1), BigInt(99))))
     assert(plan.predicates.size == 2 &&
-      plan.predicates.head.startsWith("(a > 5) and"))
+      plan.statements.head.endsWith("where (a > 5)"))
 
     val wj =
       """{"column": ["a"],
@@ -204,11 +204,12 @@ class SourcesSpec extends SparkSpec {
     assert(p.predicates == Seq(
       "`k` >= 0 and `k` < 25", "`k` >= 25 and `k` < 50",
       "`k` >= 50 and `k` < 75", "`k` >= 75 and `k` <= 99"))
-    // user where composes per-predicate: (user) and (split)
+    // user where stays inside the statement; predicates carry only the
+    // slice (the where may name a column the projection drops)
     val pw = JdbcReadPlan.plan(base.copy(where = "a > 5"), MySqlStyle,
       bounds = Some((BigInt(0), BigInt(99))))
-    assert(pw.predicates.head == "(a > 5) and (`k` >= 0 and `k` < 25)")
-    assert(pw.statements == Seq("select `a`,`k` from `t`"))
+    assert(pw.predicates == p.predicates)
+    assert(pw.statements == Seq("select `a`,`k` from `t` where (a > 5)"))
     // unsplit: where folds into the single statement
     val pu = JdbcReadPlan.plan(base.copy(numPartitions = 1, where = "a > 5"),
       MySqlStyle, bounds = Some((BigInt(0), BigInt(99))))

@@ -100,10 +100,29 @@ class StreamingSpec extends SparkSpec {
     q.processAllAvailable()
     mem.addData((3L, ns(2.0), 1L, "click", 1.0)) // way too late -> dropped
     q.processAllAvailable()
-    val n = spark.table("late_out").filter($"window_start" ===
-      new java.sql.Timestamp(t0 / 1000000L / 1000L * 1000L))
     // the first window shows exactly the on-time row
     assert(spark.table("late_out").agg(sum($"n")).head.getLong(0) == 1)
+    // the drop boundary, one row each side of it: windows are aligned to
+    // the epoch (t0 sits 200 s past a 5-minute boundary), so b = t0 +
+    // 4000 s is a window edge; an event at b + 1 min moves the watermark
+    // to exactly b. A window whose END equals the watermark is already
+    // closed: the row 1 us before b drops, the rows at b and 1 us after
+    // it land in the live [b, b + 5 min) window and are emitted once a
+    // far event closes it.
+    val b = t0 + 4000L * 1000000000L
+    mem.addData((4L, b + 60L * 1000000000L, 1L, "advance", 1.0))
+    q.processAllAvailable()
+    mem.addData((5L, b - 1000L, 1L, "before", 1.0),
+      (6L, b, 1L, "at", 1.0), (7L, b + 1000L, 1L, "after", 1.0))
+    q.processAllAvailable()
+    mem.addData((8L, b + 20L * 60000000000L, 1L, "click", 1.0))
+    q.processAllAvailable()
+    val edge = spark.table("late_out")
+      .filter($"event_type".isin("before", "at", "after"))
+      .select($"event_type", unix_micros($"window_start"), $"n")
+      .as[(String, Long, Long)].collect().sortBy(_._1).toSeq
+    assert(edge == Seq(("after", b / 1000L, 1L), ("at", b / 1000L, 1L)),
+      s"boundary rows: $edge")
     q.stop()
   }
 
